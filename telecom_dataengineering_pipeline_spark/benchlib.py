@@ -178,16 +178,11 @@ def _clear_caches(spark: SparkSession) -> None:
     spark.sparkContext._jvm.System.gc()
 
 
-def _run(df, action: str) -> None:
-    if action == "noop":
-        df.write.format("noop").mode("overwrite").save()
-    else:
-        df.count()
+def _run(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
-def measure_queries(
-    spark: SparkSession, sf_dir: str, action: str = "noop"
-) -> dict[str, float]:
+def measure_queries(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     """Timed action is the NOOP SINK since r13 (guide §1.4): ``count()``
     let the optimizer prune columns (and whole subtrees) the query claims
     to produce, so compute-heavy final projections were partly untimed;
@@ -195,16 +190,14 @@ def measure_queries(
     BENCH_BASELINE.json was re-pinned under this protocol in the same
     commit (its note records the change); r12-and-earlier BENCH_*.json
     numbers are count-protocol — cross-protocol ratios are documented in
-    OPTIMIZATION_r13.md, which also records a final count-mode run.
-    ``action="count"`` keeps the old protocol callable for exactly such
-    documentation runs."""
+    OPTIMIZATION_r13.md."""
     from .queries.registry import bench_queries
 
     timings: dict[str, float] = {}
     for name, fn in bench_queries().items():
         reps = VARIANCE_REPS
         spark.sparkContext.setJobDescription(f"bench warm: {name}")
-        _run(fn(spark, sf_dir), action)  # warm: plan + codegen JIT
+        _run(fn(spark, sf_dir))  # warm: plan + codegen JIT
         # Drop the warm run's cache residue BEFORE the timed reps: the first
         # rep would otherwise reuse the persisted relations the warm run
         # materialized (CacheManager matches the rebuilt plan) while later
@@ -214,7 +207,7 @@ def measure_queries(
         for i in range(reps):
             spark.sparkContext.setJobDescription(f"bench {name} rep {i + 1}")
             t0 = time.perf_counter()
-            _run(fn(spark, sf_dir), action)
+            _run(fn(spark, sf_dir))
             samples.append(time.perf_counter() - t0)
             _clear_caches(spark)
         spark.sparkContext.setJobDescription(None)

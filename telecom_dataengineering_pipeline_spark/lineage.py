@@ -1,81 +1,54 @@
-"""Cluster-scale lineage-cut policy (one config point for every cut site).
+"""Lineage cuts: one call site shape, the mechanism follows the deployment.
 
 The engine truncates expensive shared subtrees and iterative-loop plans with
-``localCheckpoint`` — the cheapest lineage cut (guide §5): blocks live on
-executors with NO replication. That is the right local-mode default, but on a
-real cluster a lost executor makes a local-checkpointed RDD unrecoverable and
-fails the job. VERDICT r12 item 3 flagged the assumption; this module is the
-escape hatch: every cut site in the engine routes through
-:func:`lineage_cut`, and one session conf swaps the mechanism fleet-wide.
+``df.transform(lineage_cut)`` (lazy) or ``df.transform(lineage_cut,
+eager=True)`` (inside loops that probe each round). The mechanism is not a
+setting; it is a fact of the master:
 
-``spark.graft.lineage_cut``:
+- a ``local`` master gets ``localCheckpoint`` — executor-local blocks, the
+  cheapest cut (guide §5). One process holds every executor, so there is no
+  executor to lose.
+- any other master gets a reliable ``checkpoint`` into Spark's own
+  checkpoint dir (``spark.checkpoint.dir`` or ``setCheckpointDir``), which
+  survives executor loss. With no dir set the cut raises: a node-local
+  tempdir would silently defeat the reliability the cut exists for.
 
-- ``localCheckpoint`` (default) — executor-local blocks, cheapest, fine for
-  local mode / restartable batch jobs.
-- ``checkpoint`` — reliable checkpoint to ``spark.graft.checkpoint_dir``
-  (default ``<local tmp>/spark-graft-checkpoints``; point it at durable
-  shared storage on a cluster). Survives executor loss; costs a write to the
-  checkpoint filesystem. ``checkpoint`` is always EAGER in Spark's DataFrame
-  API semantics when ``eager=True`` is requested; lazy callers keep lazy
-  semantics (materialize on first action) either way.
-- ``persist`` — ``MEMORY_AND_DISK_2`` (2-way replicated) persistence. Does
-  NOT truncate the logical plan (planning cost stays), but runtime reuse +
-  one-executor-loss recovery without a checkpoint filesystem.
+Keying on the master, not on whether a checkpoint dir happens to be set,
+keeps one dir set on a shared context from switching every later job.
 
-Call sites use ``df.transform(lineage_cut)`` (lazy) or
-``df.transform(lineage_cut_eager)`` (eager, inside iterative loops that
-measure/probe each round).
+:func:`release` frees a cut frame's state under either mechanism; loops
+call it on the round they supersede.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame
 
-_MODE_CONF = "spark.graft.lineage_cut"
-_DIR_CONF = "spark.graft.checkpoint_dir"
-_VALID = ("localCheckpoint", "checkpoint", "persist")
 
-
-def _mode(df: DataFrame) -> str:
-    try:
-        m = df.sparkSession.conf.get(_MODE_CONF, "localCheckpoint")
-    except Exception:
-        m = "localCheckpoint"
-    if m not in _VALID:
-        raise ValueError(
-            f"{_MODE_CONF}={m!r} — expected one of {', '.join(_VALID)}"
-        )
-    return m
-
-
-def _ensure_checkpoint_dir(df: DataFrame) -> None:
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        d = df.sparkSession.conf.get(
-            _DIR_CONF,
-            os.path.join(tempfile.gettempdir(), "spark-graft-checkpoints"),
-        )
-        sc.setCheckpointDir(d)
+def _local_master(df: DataFrame) -> bool:
+    return df.sparkSession.sparkContext.master.startswith("local")
 
 
 def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Cut ``df``'s lineage per the session's ``spark.graft.lineage_cut``."""
-    mode = _mode(df)
-    if mode == "checkpoint":
-        _ensure_checkpoint_dir(df)
-        return df.checkpoint(eager=eager)
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK_2)
-        if eager:
-            out.count()
-        return out
-    return df.localCheckpoint(eager=eager)
+    """Cut ``df``'s lineage with the mechanism the master calls for."""
+    if _local_master(df):
+        return df.localCheckpoint(eager=eager)
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        raise ValueError(
+            "lineage_cut on a non-local master needs a reliable checkpoint "
+            "dir: set spark.checkpoint.dir to shared storage"
+        )
+    return df.checkpoint(eager=eager)
 
 
-def lineage_cut_eager(df: DataFrame) -> DataFrame:
-    return lineage_cut(df, eager=True)
+def release(df: DataFrame) -> None:
+    """Free the blocks (and, for a reliable checkpoint, the file) pinned by
+    a frame returned from :func:`lineage_cut`. The frame must not be read
+    afterwards."""
+    sc = df.sparkSession.sparkContext
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    rdd.unpersist(True)
+    ck = rdd.getCheckpointFile()
+    if ck.isDefined():
+        path = sc._jvm.org.apache.hadoop.fs.Path(ck.get())
+        path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)

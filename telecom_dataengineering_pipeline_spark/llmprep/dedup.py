@@ -38,7 +38,7 @@ from .text import normalized_fingerprint, token_hash32, tokens
 import sys as _sys
 
 from pyspark import cloudpickle as _cp
-from ..lineage import lineage_cut, lineage_cut_eager
+from ..lineage import lineage_cut, release
 
 _cp.register_pickle_by_value(_sys.modules[__name__])
 
@@ -950,24 +950,6 @@ def cosine_dup_pairs(
     ).filter(F.col("cosine") >= threshold)
 
 
-def _persistent_rdd_ids(spark) -> set[int]:
-    """Ids currently in the context's persistent-RDD map (includes RDDs
-    pinned by ``localCheckpoint``, which ``DataFrame.unpersist`` — a
-    CacheManager operation — cannot release)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keySet().toArray()}
-
-
-def _release_rdds(spark, ids: set[int]) -> None:
-    """Unpersist the given persistent-RDD ids (no-op for ids already gone)."""
-    if not ids:
-        return
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for k in jmap.keySet().toArray():
-        if int(k) in ids:
-            jmap.get(k).unpersist()
-
-
 def connected_dup_groups_star(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     """Connected components via alternating large-star/small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond", 2014)
@@ -1006,10 +988,9 @@ def connected_dup_groups_star(pairs: DataFrame, max_iters: int = 25) -> DataFram
             mins.withColumnRenamed("a", "doc_id"), "doc_id", "left"
         ).select("doc_id", F.coalesce("_lbl", "doc_id").alias("label"))
 
-    spark = pairs.sparkSession
     prev_labels = None
-    prev_ids: set[int] = set()
-    for it in range(max_iters):
+    for _ in range(max_iters):
+        prev_e = e
         # large-star over both edge directions
         both = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         mins = both.groupBy("a").agg(F.min("b").alias("mn"))
@@ -1029,28 +1010,19 @@ def connected_dup_groups_star(pairs: DataFrame, max_iters: int = 25) -> DataFram
             .union(mins.select("a", F.col("mn").alias("b")))
             .filter(F.col("a") != F.col("b"))
             .distinct()
+            .transform(lineage_cut, eager=True)
         )
-        # Eager checkpoint so the pinned RDD registers NOW: unpersisting a
-        # checkpointed DataFrame is a CacheManager no-op, so superseded
-        # rounds are released by persistent-RDD id instead (id-diff around
-        # the checkpoint — without this, ~max_iters edge RDDs stay pinned).
-        ids_before = _persistent_rdd_ids(spark)
-        e = e.transform(lineage_cut_eager)
-        new_ids = _persistent_rdd_ids(spark) - ids_before
         labels = _labels(e)
-        if prev_labels is not None:
-            changed = (
-                labels.join(prev_labels.withColumnRenamed("label", "_old"), "doc_id")
-                .filter(F.col("label") != F.col("_old"))
-                .count()
-            )
-            if changed == 0:
-                # the returned _labels(e) still reads THIS round's
-                # checkpoint — release the superseded previous round only
-                _release_rdds(spark, prev_ids)
-                break
-        _release_rdds(spark, prev_ids)
-        prev_ids = new_ids
+        done = prev_labels is not None and (
+            labels.join(prev_labels.withColumnRenamed("label", "_old"), "doc_id")
+            .filter(F.col("label") != F.col("_old"))
+            .count()
+            == 0
+        )
+        # only prev_labels read the superseded round's edges, and it is done
+        release(prev_e)
+        if done:
+            break
         prev_labels = labels
     return _labels(e).select("doc_id", F.col("label").alias("group_id"))
 
@@ -1081,41 +1053,30 @@ def connected_dup_groups(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         .distinct()
         .withColumn("label", F.col("doc_id"))
     )
-    spark = pairs.sparkSession
-    prev_df = None  # persist()-backed round: DataFrame.unpersist works
-    prev_ids: set[int] = set()  # checkpoint-backed round: release by RDD id
     for it in range(max_iters):
         prop = edges.join(labels, edges["a"] == labels["doc_id"]).select(
             F.col("b").alias("doc_id"), "label"
         )
         new_labels = (
-            labels.union(prop).groupBy("doc_id").agg(F.min("label").alias("label"))
+            labels.union(prop)
+            .groupBy("doc_id")
+            .agg(F.min("label").alias("label"))
+            # Cut every round: iterative self-joins otherwise grow the
+            # plan exponentially.
+            .transform(lineage_cut, eager=True)
         )
-        # Truncate lineage every few rounds — iterative self-joins otherwise
-        # grow the plan exponentially and executor storage accumulates. The
-        # checkpoint rounds pin an RDD that DataFrame.unpersist cannot
-        # release (CacheManager no-op), so those are dropped by id.
-        if it % 4 == 3:
-            ids_before = _persistent_rdd_ids(spark)
-            new_labels = new_labels.transform(lineage_cut_eager)
-            new_ids = _persistent_rdd_ids(spark) - ids_before
-            new_df = None
-        else:
-            new_labels = new_labels.persist()
-            new_ids = set()
-            new_df = new_labels
         changed = (
             new_labels.join(labels.withColumnRenamed("label", "old"), "doc_id")
             .filter(F.col("label") != F.col("old"))
             .count()
         )
-        if prev_df is not None:
-            prev_df.unpersist()
-        _release_rdds(spark, prev_ids)
-        prev_df, prev_ids = new_df, new_ids
+        if it:  # every round after the first supersedes a cut
+            release(labels)
         labels = new_labels
         if changed == 0:
             break
+    if max_iters > 0:
+        release(edges)  # the result reads only its last round's cut
     return labels.select("doc_id", F.col("label").alias("group_id"))
 
 

@@ -412,6 +412,3 @@ class MedallionPipeline:
                 )
             )
         )
-
-    def run(self) -> list[str]:
-        return self.dag().run()

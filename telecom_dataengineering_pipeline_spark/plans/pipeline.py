@@ -147,15 +147,6 @@ class PipelineDAG:
             ts.add(s.name, *deps)
         return [by_name[n] for n in ts.static_order()]
 
-    def run(self) -> list[str]:
-        """Execute stages in dependency order; returns the order run.
-        First failure propagates — use ``run_managed`` for retry/SLA/skip
-        semantics."""
-        order = self.topological_order()
-        for s in order:
-            s.run()
-        return [s.name for s in order]
-
     def _stage_deps(self) -> dict[str, set[str]]:
         producers = self._producers()
         return {

@@ -77,7 +77,7 @@ from pyspark.sql.types import StructField, StructType
 
 from ..operators.merge import merge_upsert
 from .table_format import TableSink
-from ..lineage import lineage_cut, lineage_cut_eager
+from ..lineage import lineage_cut
 
 _LOG_DIR = "_txnlog"
 _DATA_DIR = "data"
@@ -693,7 +693,7 @@ class TxnLogTable:
             )
             .filter(_predicate_expr(where))
             .select("__base", "__pos")
-            .transform(lineage_cut_eager)  # one scan feeds the no-op check + the sidecar
+            .transform(lineage_cut, eager=True)  # one scan feeds the no-op check + the sidecar
         )
         if hits.isEmpty():
             return rv  # predicate matched nothing live
@@ -813,7 +813,7 @@ class TxnLogTable:
             hits.distinct()
             .join(F.broadcast(base_map), "__base")
             .select(F.lit(dv_id).alias("dv_id"), "file", F.col("__pos").alias("pos"))
-            .transform(lineage_cut_eager)  # one scan feeds both the collect and the write
+            .transform(lineage_cut, eager=True)  # one scan feeds both the collect and the write
         )
         # One row per FILE — bounded by candidate file count, not rows.
         affected = sorted(
@@ -867,7 +867,7 @@ class TxnLogTable:
                 self._tagged_scan(spark, state, schema, candidates), spark, state, candidates
             )
             .filter(_predicate_expr(where))
-            .transform(lineage_cut_eager)  # one scan feeds the guard, the DV, the images
+            .transform(lineage_cut, eager=True)  # one scan feeds the guard, the DV, the images
         )
         if matched.isEmpty():
             return rv  # predicate matched nothing live: no-op, no commit
@@ -956,7 +956,7 @@ class TxnLogTable:
                 self._tagged_scan(spark, state, schema, scan_files), spark, state, scan_files
             )
             .join(F.broadcast(key_set), list(keys), "left_semi")
-            .transform(lineage_cut_eager)  # one scan feeds the guard, the DV, the merge
+            .transform(lineage_cut, eager=True)  # one scan feeds the guard, the DV, the merge
         )
         # No live match → pure insert: don't publish a sidecar that merely
         # re-vectors the candidates' existing positions.
@@ -1022,7 +1022,7 @@ class TxnLogTable:
         files = list(state["active"])
         if not files:
             return rv
-        key_set = keys_df.select(*keys).distinct().transform(lineage_cut_eager)
+        key_set = keys_df.select(*keys).distinct().transform(lineage_cut, eager=True)
         if key_set.isEmpty():
             return rv  # empty key set: nothing to delete, no commit
         # Bounded scalar probe: does the feed carry any NULL key at all?
@@ -1061,7 +1061,7 @@ class TxnLogTable:
         hits = (
             live.join(kren, cond, "left_semi")
             .select("__base", "__pos")
-            .transform(lineage_cut_eager)  # one scan feeds the no-op check + the sidecar
+            .transform(lineage_cut, eager=True)  # one scan feeds the no-op check + the sidecar
         )
         if hits.isEmpty():
             return rv  # no live row matches any key: no-op, no commit

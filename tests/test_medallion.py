@@ -15,8 +15,9 @@ from telecom_dataengineering_pipeline_spark.plans.medallion import MedallionPipe
 def pipeline(spark):
     with tempfile.TemporaryDirectory() as d:
         p = MedallionPipeline(spark, d, n_events=5000, n_customers=300)
-        order = p.run()
-        yield p, order
+        run = p.dag().run_managed()
+        assert run.ok, run.failed
+        yield p, [r.name for r in run.results]
 
 
 def test_stage_order_respects_dependencies(pipeline):

@@ -484,23 +484,23 @@ def test_bellman_ford_collapses_identity_rounds(spark):
     localCheckpoint (the merged relation), so a huge round budget on a
     tiny-diameter graph must NOT add ~rounds checkpoints. Results must be
     identical to the unrolled round count."""
-    from telecom_dataengineering_pipeline_spark.llmprep.dedup import (
-        _persistent_rdd_ids,
-    )
     from telecom_dataengineering_pipeline_spark.operators.graph import (
         bellman_ford_distance,
     )
+
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
     # diameter 3 from the seed; frontier is empty after round 4
     df = spark.createDataFrame(
         [(0, 1, 1), (1, 2, 1), (2, 3, 1)], "src long, dst long, w long"
     )
-    before = _persistent_rdd_ids(spark)
+    before = pinned()
     got = {
         r["node"]: r["dist"]
         for r in bellman_ford_distance(df, [0], rounds=60).collect()
     }
-    new_rdds = len(_persistent_rdd_ids(spark) - before)
+    new_rdds = len(pinned() - before)
     assert got == {0: 0, 1: 1, 2: 2, 3: 3}
     # executed rounds ≈ 4 (3 improving + 1 empty-probe) → edge + seed +
     # ~4 merged checkpoints; 60 unrolled rounds would pin ~62
